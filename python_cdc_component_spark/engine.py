@@ -15,7 +15,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -89,6 +89,23 @@ def _write_table_manifest(merged: TableSchema, path: str,
                               incremental=True if cfg.incremental else None)
     else:
         write_manifest(merged, path, incremental=cfg.incremental)
+
+
+def _write_table(result: DataFrame, path: str, cfg: SyncConfig) -> dict:
+    """Write one output table and return its offset bounds
+    ``{"ts", "pos"}`` (max event timestamp and log position; NULL for an
+    empty table). The bounds are observed during the write itself, so
+    the scan, shuffle and window run once rather than again for a
+    separate aggregate. The observed frame serves this one write only:
+    callers keep using the un-observed ``result``."""
+    obs = Observation()
+    observed = result.observe(obs, F.max(SC.EVENT_TIMESTAMP_MS).alias("ts"),
+                              F.max(SC.POS).alias("pos"))
+    if cfg.output_format == "csv":
+        write_csv(observed, path)
+    else:
+        write_parquet(observed, path)
+    return obs.get
 
 
 def to_output_columns(df: DataFrame) -> DataFrame:
@@ -177,11 +194,7 @@ def sync(spark: SparkSession, sf_dir: str, out_dir: str,
         from .operators.schema_align import align_to_schema
         result = align_to_schema(result, merged.struct)
 
-    if cfg.output_format == "csv":
-        write_csv(result, path)
-    else:
-        write_parquet(result, path)
-
+    bounds = _write_table(result, path, cfg)
     registry.save(registry_path)
     _write_table_manifest(merged, path + ".manifest", cfg)
 
@@ -194,10 +207,6 @@ def sync(spark: SparkSession, sf_dir: str, out_dir: str,
         bounds = events.agg(
             F.max(SC.event_timestamp).alias("ts"),
             F.max(SC.pos).alias("pos")).collect()[0]
-    else:
-        bounds = result.agg(
-            F.max(SC.EVENT_TIMESTAMP_MS).alias("ts"),
-            F.max(SC.POS).alias("pos")).collect()[0]
     if bounds["ts"] is not None and bounds["pos"] is not None:
         # An empty source yields NULL bounds — keep the prior offsets so
         # is_initial_run semantics survive an empty run (the reference
@@ -428,16 +437,8 @@ def sync_multi(spark: SparkSession, events: DataFrame, out_dir: str,
             from .operators.schema_align import align_to_schema
             result = align_to_schema(result, merged.struct)
 
-        if cfg.output_format == "csv":
-            write_csv(result, path)
-        else:
-            write_parquet(result, path)
-        write_manifest(merged, path + ".manifest",
-                       incremental=cfg.incremental)
-
-        bounds = result.agg(
-            F.max(SC.EVENT_TIMESTAMP_MS).alias("ts"),
-            F.max(SC.POS).alias("pos")).collect()[0]
+        bounds = _write_table(result, path, cfg)
+        _write_table_manifest(merged, path + ".manifest", cfg)
         if bounds["ts"] is not None and bounds["pos"] is not None:
             state.offsets[table_name] = {"ts": bounds["ts"],
                                          "file": "binlog.000001",

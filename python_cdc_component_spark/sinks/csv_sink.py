@@ -5,8 +5,10 @@ Parity targets:
   (HEADER false, DELIMITER ',')`` (reference ``staging.py:188-201``);
 - K2 sliced CSV: one slice per chunk, 500 MB target slices via
   ``kbc_slicer`` (``staging.py:266-282,325-340``) — Spark slices
-  naturally: one file per partition, sized with a pre-write
-  repartition by target bytes.
+  naturally: one file per partition, capped before the write at
+  ``max(defaultParallelism, estimated bytes / 500 MB)`` slices, so a
+  table under 500 MB lands as up to one slice per core (loaders read
+  the whole slice directory either way).
 
 NULLs are written as the ``KBC__NULL`` sentinel so they round-trip
 through the S7 reader exactly like the reference staging format.
@@ -52,8 +54,13 @@ def write_csv(df: DataFrame, path: str, columns: list[str] | None = None,
     if columns:
         df = df.select(*columns)
     n = _estimate_partitions(df, target_slice_bytes)
-    if n is not None and n < df.rdd.getNumPartitions():
-        df = df.coalesce(n)
+    if n is not None:
+        # floor at one slice per core so a small table's post-shuffle
+        # work (window sort + CSV encode) does not run as one task;
+        # coalesce never adds partitions, so no probe of the current
+        # count is needed (under AQE that probe runs the shuffle).
+        df = df.coalesce(
+            max(n, df.sparkSession.sparkContext.defaultParallelism))
     writer = (df.write.mode(mode)
               .option("header", str(header).lower())
               .option("sep", delimiter)
